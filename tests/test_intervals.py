@@ -1,6 +1,8 @@
 import datetime as dt
 import random
 
+import pytest
+
 from vectorsearchutil_spark.operators.intervals import (
     concurrency_by_day,
     sessions_from_events,
@@ -96,6 +98,39 @@ def test_sessions_from_events_intervals(spark):
     got = sorted(
         (r["user_id"], r["session_id"], r["start_ts"], r["end_ts"])
         for r in sessions_from_events(df).collect()
+    )
+    assert got == [
+        (7, 1, base, base + 10 * m),
+        (7, 2, base + 50 * m, base + 50 * m),
+        (8, 1, base, base),
+    ]
+
+
+def _has_duplicate_output(node) -> bool:
+    """True when any node of a JVM logical plan outputs one attribute
+    twice."""
+    out = node.output()
+    ids = [out.apply(i).exprId().id() for i in range(out.size())]
+    kids = node.children()
+    return len(ids) != len(set(ids)) or any(
+        _has_duplicate_output(kids.apply(i)) for i in range(kids.size())
+    )
+
+
+@pytest.mark.parametrize("order_col", ["ts", "user_id"])
+def test_sessions_from_events_order_col_may_repeat_a_key(spark, order_col):
+    """``order_col`` may name the timestamp or the user column itself:
+    the early projection must not carry that column twice through the
+    user-key shuffle, and the sessions are unchanged."""
+    base = dt.datetime(2024, 1, 1, 10, 0)
+    m = dt.timedelta(minutes=1)
+    rows = [(7, base), (7, base + 10 * m), (7, base + 50 * m), (8, base)]
+    df = spark.createDataFrame(rows, ["user_id", "ts"])
+    out = sessions_from_events(df, order_col=order_col)
+    assert not _has_duplicate_output(out._jdf.queryExecution().optimizedPlan())
+    got = sorted(
+        (r["user_id"], r["session_id"], r["start_ts"], r["end_ts"])
+        for r in out.collect()
     )
     assert got == [
         (7, 1, base, base + 10 * m),

@@ -77,22 +77,30 @@ def test_neardup_blocked_equals_matrix(emb):
         assert got == want, f"n_blocks={n_blocks}"
 
 
-def test_neardup_auto_gates_on_size(emb):
+def test_neardup_auto_gates_on_size(emb, monkeypatch):
     """auto must route big corpora to the blocked (collect-free)
-    plan: with the gate forced below the corpus size the plan must
-    contain no broadcast of a driver-built corpus matrix — assert by
-    strategy equivalence of results AND that the tiny-gate call takes
-    the blocked code path (observable via n_rows bypass)."""
-    n = emb.count()
-    # gate far below corpus cells → auto picks blocked
-    small_gate = neardup_pairs(
-        emb, threshold=0.4, strategy="auto", matrix_max_cells=1, n_rows=n
-    )
-    # gate above corpus cells → auto picks matrix
-    big_gate = neardup_pairs(
-        emb, threshold=0.4, strategy="auto",
-        matrix_max_cells=10**12, n_rows=n,
-    )
+    plan: with the gate constant below the corpus size the call must
+    take the blocked code path, and its results must equal the matrix
+    path's, which a gate above the corpus size selects."""
+    from vectorsearchutil_spark.operators import similarity as sim
+
+    n = emb.filter(F.col("embedding").isNotNull()).count()
+    blocked_calls = []
+    real_blocked = sim.neardup_pairs_blocked
+
+    def spy(*args, **kwargs):
+        blocked_calls.append(1)
+        return real_blocked(*args, **kwargs)
+
+    monkeypatch.setattr(sim, "neardup_pairs_blocked", spy)
+    # gate far below corpus rows → auto picks blocked
+    monkeypatch.setattr(sim, "_NEARDUP_MATRIX_MAX_ROWS", 1)
+    small_gate = neardup_pairs(emb, threshold=0.4, strategy="auto")
+    assert blocked_calls == [1]
+    # gate at corpus rows → auto picks matrix
+    monkeypatch.setattr(sim, "_NEARDUP_MATRIX_MAX_ROWS", n)
+    big_gate = neardup_pairs(emb, threshold=0.4, strategy="auto")
+    assert blocked_calls == [1]
     a = sorted((r["id_a"], r["id_b"]) for r in small_gate.collect())
     b = sorted((r["id_a"], r["id_b"]) for r in big_gate.collect())
     assert a == b and len(a) > 0

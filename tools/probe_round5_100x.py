@@ -231,7 +231,7 @@ def probe_connected_components_100x(spark):
     from vectorsearchutil_spark.operators.dedup import connected_components
 
     # 8M edges / 4M nodes in ~1.3M small components (forced
-    # distributed path — above the 2M driver_max_edges gate)
+    # distributed path — above the 2M _CC_DRIVER_MAX_EDGES gate)
     pairs = spark.range(8_000_000).selectExpr(
         "pmod(xxhash64(id, 1), 4000000) AS id_a",
         "pmod(xxhash64(id, 2), 4000000) AS id_b",

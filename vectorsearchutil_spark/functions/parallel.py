@@ -1,4 +1,6 @@
-"""Scale-adaptive parallelism floor for fan-out stages.
+"""Scale-adaptive parallelism floor for fan-out stages, and the size
+gate shared by every driver/distributed operator (with the helpers
+that turn its pulled Arrow table into numpy).
 
 Spark sizes scan partitions by INPUT BYTES (``maxPartitionBytes``) and
 AQE coalesces shuffle partitions by MAP-OUTPUT BYTES — both lie for a
@@ -13,8 +15,12 @@ number from the session, never a hard-coded constant.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 
 def fanout_repartition(df: DataFrame, gated: bool = True) -> DataFrame:
@@ -56,3 +62,53 @@ def fanout_repartition(df: DataFrame, gated: bool = True) -> DataFrame:
         except PySparkException:
             return df
     return df.repartition(target)
+
+
+def pull_if_small(df: DataFrame, max_rows: int | None) -> pa.Table | DataFrame:
+    """The size gate of every driver/distributed operator: ``df`` is
+    cached and read once via ``limit(max_rows + 1).toArrow()``. At most
+    ``max_rows`` rows: the Arrow table (rows in no set order) is
+    returned and the cache released. More: the cached, computed frame
+    is returned, so the distributed path never re-runs the upstream.
+    ``None`` pulls all uncached (a forced driver path); a negative
+    bound returns the frame cached, not yet computed (a forced
+    distributed path). A cache the caller made is never released."""
+    if max_rows is None:
+        return df.toArrow()
+    owned = df.storageLevel == StorageLevel.NONE
+    df = df.cache()
+    if max_rows < 0:
+        return df
+    tbl = df.limit(max_rows + 1).toArrow()
+    if tbl.num_rows > max_rows:
+        return df
+    if owned:
+        df.unpersist()
+    return tbl
+
+
+def strategy_bound(strategy: str, max_rows: int) -> int | None:
+    """``pull_if_small``'s bound for ``strategy=``: 'auto' gates at
+    ``max_rows``, 'driver' always pulls, any other never does."""
+    return {"auto": max_rows, "driver": None}.get(strategy, -1)
+
+
+def pulled_ids(tbl: pa.Table, name: str) -> np.ndarray:
+    """int64 ids from a pulled table; a NULL id raises instead of
+    turning into a garbage integer."""
+    col = tbl.column(name)
+    if col.null_count:
+        raise ValueError(f"NULL in pulled id column {name!r}")
+    return col.to_numpy().astype(np.int64)
+
+
+def pulled_matrix(tbl: pa.Table, name: str) -> np.ndarray:
+    """Row-major float64 ``(n, dim)`` matrix from a pulled list column
+    without NULL rows; zero rows give a ``(0, 0)`` one."""
+    arr = tbl.column(name).combine_chunks()
+    lens = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
+    dim = int(lens[0]) if len(lens) else 0
+    if (lens != dim).any():
+        raise ValueError(f"vectors of unequal length in {name!r}")
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(arr), dim)

@@ -19,10 +19,16 @@ the exact form since its contract is oracle-checkable determinism.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark.functions import parallel
 from vectorsearchutil_spark.functions.vector import l2_distance
+
+#: working-set gate of ``kmeans``' driver path, in float64 cells
+#: (rows × dim; 5M ≈ 40 MB).
+_KMEANS_DRIVER_MAX_CELLS = 5_000_000
 
 
 def _recompute_centroids(
@@ -67,7 +73,6 @@ def _assign_blas(
     n_batch×k×dim), argmin over the k columns. Ties break to the
     lowest cid exactly like the expression form (centroids are
     iterated in cid order and argmin keeps the first minimum)."""
-    import numpy as np
     import pandas as pd
 
     ordered = sorted(cents)
@@ -159,21 +164,39 @@ def _round_half_up(values, decimals: int) -> list[float]:
     ]
 
 
+def _nearest(X: np.ndarray, cents: list[list[float]]) -> np.ndarray:
+    """Each row's nearest centroid: float64 squared L2, ties to the
+    first (lowest cid), matching the distributed array_min ordering."""
+    C = np.array(cents, dtype=np.float64)
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+
+
+def _lloyd(X: np.ndarray, k: int, iterations: int) -> list[list[float]]:
+    """Driver-side Lloyd's from the first ``k`` rows, shared by
+    ``_kmeans_driver`` and ``pq.pq_train``: 6dp HALF_UP centroid
+    rounding each iteration; an empty cluster keeps its centroid."""
+    cents = [X[i].tolist() for i in range(min(k, len(X)))]
+    for _ in range(iterations):
+        a = _nearest(X, cents)
+        for c in range(len(cents)):
+            members = X[a == c]
+            if len(members):
+                cents[c] = _round_half_up(members.mean(axis=0), 6)
+    return cents
+
+
 def _kmeans_driver(
-    work: DataFrame,
+    spark,
+    tbl,
     k: int,
     iterations: int,
     vector_col: str,
     id_col: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """Driver-side Lloyd's for small inputs — bit-identical math to
-    the distributed path (float64 L2, argmin ties to lowest cid, 6dp
-    HALF_UP centroid rounding, empty cluster keeps its centroid)."""
-    import numpy as np
-
-    rows = work.orderBy(id_col).collect()
-    spark = work.sparkSession
-    if not rows:
+    """``_lloyd`` over the pulled working set — bit-identical math to
+    the distributed path. Rows are sorted by id here, so the init (the
+    k lowest-id vectors) does not depend on the pulled row order."""
+    if not tbl.num_rows:
         # empty-in, empty-out (Spark convention): no data, no
         # clusters — found by the registry-wide empty-input sweep
         return (
@@ -182,25 +205,13 @@ def _kmeans_driver(
             ),
             spark.createDataFrame([], "cid int, cv array<double>"),
         )
-    ids = [r[0] for r in rows]
-    X = np.array([r[1] for r in rows], dtype=np.float64)
-    cents = [X[i].tolist() for i in range(min(k, len(ids)))]
-
-    def assign(C: np.ndarray) -> np.ndarray:
-        # ||x-c||² argmin; ties → first (lowest cid), matching the
-        # distributed array_min struct ordering
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        return d2.argmin(axis=1)
-
-    for _ in range(iterations):
-        C = np.array(cents, dtype=np.float64)
-        a = assign(C)
-        for c in range(len(cents)):
-            members = X[a == c]
-            if len(members):
-                cents[c] = _round_half_up(members.mean(axis=0), 6)
+    ids = parallel.pulled_ids(tbl, id_col)
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order].tolist()
+    X = parallel.pulled_matrix(tbl, vector_col)[order]
+    cents = _lloyd(X, k, iterations)
+    a = _nearest(X, cents)
     C = np.array(cents, dtype=np.float64)
-    a = assign(C)
     dist = np.sqrt(((X - C[a]) ** 2).sum(axis=1))
     assignments = spark.createDataFrame(
         [
@@ -224,7 +235,6 @@ def kmeans(
     id_col: str = "vec_id",
     dim: int = 64,
     strategy: str = "auto",
-    driver_max_cells: int = 5_000_000,
     n_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``iterations`` Lloyd's steps; returns (assignments,
@@ -241,38 +251,30 @@ def kmeans(
     centroid rounding round-trips exactly through Python floats, so
     results are bit-identical to the lineage-chained form.
 
-    ``strategy`` is size-gated physical strategy selection (the
-    broadcast-join analogy): when the working set is at most
-    ``driver_max_cells`` float64 cells (default 5M ≈ 40 MB) the
-    Lloyd's loop runs on the driver in numpy — identical math, none
-    of the per-iteration job/shuffle overhead. Above the gate (any
-    real corpus) the distributed plan runs. ``strategy=`` forces
-    either path ('driver' / 'distributed')."""
-    # narrow working set — each Lloyd's round re-reads (id, vector)
-    # only (at 100 TB: persist MEMORY_AND_DISK or checkpoint)
+    ``strategy`` is size-gated through ``pull_if_small`` (the
+    broadcast-join analogy): a working set of at most
+    ``_KMEANS_DRIVER_MAX_CELLS`` float64 cells (5M ≈ 40 MB) runs the
+    Lloyd's loop on the driver in numpy — identical math, none of the
+    per-iteration job/shuffle overhead. Above the gate (any real
+    corpus) the distributed plan runs over the cached working set.
+    ``strategy=`` forces either path ('driver' / 'distributed').
+    ``n_rows``, when known, sizes ``_assign``'s expression/BLAS choice
+    (the distributed path counts the cached set otherwise)."""
     from vectorsearchutil_spark.functions.vector import finite_vector
 
-    # NULL or non-finite vectors cannot be assigned or averaged —
-    # they are not part of the clustering population
-    work = df.select(id_col, vector_col).filter(
-        finite_vector(F.col(vector_col))
+    # narrow working set — each Lloyd's round re-reads (id, vector)
+    # only. NULL or non-finite vectors cannot be assigned or averaged
+    # — they are not part of the clustering population
+    work = parallel.pull_if_small(
+        df.select(id_col, vector_col).filter(finite_vector(F.col(vector_col))),
+        parallel.strategy_bound(strategy, _KMEANS_DRIVER_MAX_CELLS // dim),
     )
-    if strategy == "auto":
-        if n_rows is None:
-            # cache BEFORE counting: the sizing pass doubles as cache
-            # priming, so whichever path runs next reads the cached
-            # working set instead of re-scanning — the count job is no
-            # longer an extra corpus scan. Callers that already know
-            # the row count pass n_rows and skip the job entirely.
-            work = work.cache()
-            n_rows = work.count()
-        strategy = (
-            "driver" if n_rows * dim <= driver_max_cells
-            else "distributed"
+    if not isinstance(work, DataFrame):
+        return _kmeans_driver(
+            df.sparkSession, work, k, iterations, vector_col, id_col
         )
-    if strategy == "driver":
-        return _kmeans_driver(work, k, iterations, vector_col, id_col)
-    work = work.cache()
+    if n_rows is None:
+        n_rows = work.count()  # cheap: reads the cached working set
     init = (
         work.orderBy(id_col)
         .limit(k)
@@ -331,7 +333,6 @@ def silhouette_ab(
         len(ordered[0][1]) if ordered else 1
     )
     if n_rows is not None and cells > _ASSIGN_BLAS_CELLS:
-        import numpy as np
         import pandas as pd
 
         cids = np.array([c for c, _ in ordered], dtype=np.int64)

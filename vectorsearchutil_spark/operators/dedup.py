@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark.functions import parallel
 from vectorsearchutil_spark.functions.text import (
     minhash_base_hashes,
     shingles_of_tokens,
@@ -686,9 +687,15 @@ def embedding_neardup_pairs(
     )
 
 
-def _cc_driver(edges: DataFrame) -> DataFrame:
-    """Union-find on the driver — the exact min-label fixpoint in one
-    pass, for edge sets below the driver gate."""
+#: symmetric-edge gate of ``connected_components``' driver path
+#: (2M edges ≈ 32 MB of longs).
+_CC_DRIVER_MAX_EDGES = 2_000_000
+
+
+def _cc_driver(spark, tbl) -> DataFrame:
+    """Union-find over the pulled half-edge table — the exact min-label
+    fixpoint in one driver pass, for edge sets below the gate. The
+    result is independent of the table's row order."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -699,14 +706,8 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    # ONE Arrow-batched job for the bounded pull (≤ the 2M-edge gate ≈
-    # 32 MB of longs): toLocalIterator fetches partition batches in
-    # sequential round-trips — up to one scheduler round per partition
-    # — and pickles Rows; r11 optimization round.
-    tbl = edges.select("a", "b").toArrow()
-    for a, b in zip(
-        tbl.column("a").to_pylist(), tbl.column("b").to_pylist()
-    ):
+    ends = [parallel.pulled_ids(tbl, c).tolist() for c in ("a", "b")]
+    for a, b in zip(*ends):
         for n in (a, b):
             if n not in parent:
                 parent[n] = n
@@ -716,9 +717,7 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     out = [(n, find(n)) for n in sorted(parent)]
-    return edges.sparkSession.createDataFrame(
-        out, "node long, component long"
-    )
+    return spark.createDataFrame(out, "node long, component long")
 
 
 def _cc_alternating(edges: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -793,7 +792,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 25,
     strategy: str = "auto",
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over a near-dup pair list: (node,
     component) where component = the minimum node id reachable from
@@ -811,45 +809,35 @@ def connected_components(
     O(log² n); min-propagation keeps the oracle-checkable exact
     fixpoint with the same output.
 
-    ``strategy`` is size-gated physical strategy selection: an edge
-    set of at most ``driver_max_edges`` (default 2M ≈ 32 MB) runs
-    union-find on the driver — the same fixpoint in one pass, none of
-    the per-round join/checkpoint jobs. Larger edge sets (deep 100 TB
-    near-dup graphs) take the distributed propagation. ``strategy=``
-    forces a path: 'driver' / 'distributed' (min-label propagation,
-    O(diameter) rounds) / 'alternating' (large-star/small-star,
-    O(log² n) rounds — prefer for deep-chain graphs).
+    ``strategy`` is size-gated through ``pull_if_small`` (as in
+    ``graph.pagerank``): at most ``_CC_DRIVER_MAX_EDGES`` symmetric
+    edges run union-find on the driver — the same fixpoint in one
+    pass, none of the per-round join/checkpoint jobs. Larger edge sets
+    (deep 100 TB near-dup graphs) take the distributed propagation
+    over the cached pair list. ``strategy=`` forces a path: 'driver' /
+    'distributed' (min-label propagation, O(diameter) rounds) /
+    'alternating' (large-star/small-star, O(log² n) rounds — prefer
+    for deep-chain graphs).
     """
-    # checkpoint the oriented pair list FIRST: the symmetric view
-    # references it twice, and without the barrier the (expensive)
-    # upstream pair plan — LSH, shingle join, … — would execute once
-    # per branch (no ReusedExchange across a union)
-    half = pairs.select(
-        F.col(src).cast("long").alias("a"),
-        F.col(dst).cast("long").alias("b"),
-    ).localCheckpoint()
-    if strategy == "auto":
-        # gate on the HALF pair count (same 2M-symmetric-edge
-        # boundary): the driver path needs neither the symmetric
-        # union nor distinct — union-find's min-label fixpoint is
-        # invariant under duplicate and one-directional edges — so
-        # below the gate we skip building the symmetric edge set
-        # entirely (one union+distinct shuffle, one localCheckpoint
-        # materialization and a 2× larger driver pull, all removed;
-        # r10 optimization round).
-        # ASSUMPTION (ADVICE r10): ``pairs`` is canonical — one row
-        # per unordered pair (every in-repo producer emits a
-        # distinct id_a < id_b list). A producer that emitted
-        # duplicates/both orientations would only inflate this count
-        # and push the graph onto the distributed path early —
-        # correctness is unaffected either way (union-find and
-        # min-label are duplicate-invariant).
-        strategy = (
-            "driver" if half.count() * 2 <= driver_max_edges
-            else "distributed"
-        )
-    if strategy == "driver":
-        return _cc_driver(half)
+    # The gate counts HALF pairs against half the symmetric-edge
+    # bound: the driver path needs neither the symmetric union nor
+    # distinct — union-find's min-label fixpoint is invariant under
+    # duplicate and one-directional edges — so below the gate the
+    # symmetric edge set is never built (r10 optimization round).
+    # ASSUMPTION (ADVICE r10): ``pairs`` is canonical — one row per
+    # unordered pair (every in-repo producer emits a distinct
+    # id_a < id_b list). A producer that emitted duplicates/both
+    # orientations would only push the graph onto the distributed
+    # path early — correctness is unaffected either way.
+    half = parallel.pull_if_small(
+        pairs.select(
+            F.col(src).cast("long").alias("a"),
+            F.col(dst).cast("long").alias("b"),
+        ),
+        parallel.strategy_bound(strategy, _CC_DRIVER_MAX_EDGES // 2),
+    )
+    if not isinstance(half, DataFrame):
+        return _cc_driver(pairs.sparkSession, half)
     edges = (
         half.union(half.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()

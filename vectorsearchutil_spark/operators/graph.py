@@ -24,23 +24,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectorsearchutil_spark.functions import parallel
+
 #: fixed-point scale: 40 fractional bits. deg_in · 2^40 stays far
 #: below 2^53, so the long sum round-trips exactly through double.
 _FP = float(2**40)
 
-#: edge-count gate below which ``pagerank`` runs its fixed-point
-#: iterations on the driver (same boundary and rationale as
-#: ``dedup.connected_components``: ≤ 2M edges ≈ 32 MB of longs — the
-#: iterative-join plan's ~4 jobs/iteration of fixed scheduling latency
-#: dwarf the arithmetic at this size, while above it the distributed
-#: path is the only shape that survives 100 TB graphs).
+#: edge-count gate of ``pagerank``'s driver path (same boundary and
+#: rationale as ``dedup.connected_components``: ≤ 2M edges ≈ 32 MB of
+#: longs — the iterative-join plan's ~4 jobs/iteration of fixed
+#: scheduling latency dwarf the arithmetic at this size, while above
+#: it the distributed path is the only shape that survives 100 TB
+#: graphs).
 _PAGERANK_DRIVER_MAX_EDGES = 2_000_000
+
+#: edge-count gate of ``triangle_count``'s driver census.
+_TRIANGLE_DRIVER_MAX_EDGES = 2_000_000
 
 
 def _pagerank_driver(
-    e: DataFrame, damping: float, iters: int, round_dp: int
+    spark, tbl, damping: float, iters: int, round_dp: int
 ) -> DataFrame:
-    """Driver-side fixed-point PageRank for edge sets below the gate —
+    """Driver-side fixed-point PageRank over the pulled edge table —
     BIT-IDENTICAL to the iterative-join path by construction: every
     float op (r/deg, ×2^40, floor, base + d·(Σq/2^40)) is the same
     IEEE double expression in the same order, and the per-node
@@ -52,16 +57,15 @@ def _pagerank_driver(
     import numpy as np
     import pandas as pd
 
-    tbl = e.toArrow()
-    srcs = np.asarray(tbl.column("_src").to_pylist(), dtype=np.int64)
-    dsts = np.asarray(tbl.column("_dst").to_pylist(), dtype=np.int64)
+    srcs = parallel.pulled_ids(tbl, "_src")
+    dsts = parallel.pulled_ids(tbl, "_dst")
     ids = np.unique(np.concatenate([srcs, dsts]))
     sidx = np.searchsorted(ids, srcs)
     didx = np.searchsorted(ids, dsts)
     deg = np.bincount(sidx, minlength=len(ids)).astype(np.int64)
     has_rank = np.zeros(len(ids), dtype=bool)
     has_rank[didx] = True  # nodes = distinct _dst
-    n_nodes = int(has_rank.sum())
+    n_nodes = max(int(has_rank.sum()), 1)  # no edges → no ranks
     base = (1.0 - damping) / float(n_nodes)
     r = np.zeros(len(ids), dtype=np.float64)
     r[has_rank] = 1.0 / float(n_nodes)
@@ -77,17 +81,9 @@ def _pagerank_driver(
         r = base + damping * (sq.astype(np.float64) / _FP)
         has_rank = new_has
     out = has_rank & (deg > 0)  # final ranks ⋈ deg on _src (inner)
-    pdf = pd.DataFrame(
-        {
-            "node": ids[out],
-            "degree": deg[out],
-            "_r": r[out],
-        }
-    )
+    pdf = pd.DataFrame({"node": ids[out], "degree": deg[out], "_r": r[out]})
     return (
-        e.sparkSession.createDataFrame(
-            pdf, "node long, degree long, _r double"
-        )
+        spark.createDataFrame(pdf, "node long, degree long, _r double")
         .select(
             "node", "degree", F.round(F.col("_r"), round_dp).alias("pagerank")
         )
@@ -102,7 +98,6 @@ def pagerank(
     iters: int = 3,
     round_dp: int = 6,
     strategy: str = "auto",
-    driver_max_edges: int = _PAGERANK_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """PageRank over a DIRECTED edge list (symmetrize upstream for an
     undirected similarity graph). Nodes are the vertices appearing in
@@ -115,38 +110,24 @@ def pagerank(
     hash join (ranks are |V|-sized, edges |E|-sized) plus one long-sum
     aggregate — the standard iterative-join PageRank plan.
 
-    ``strategy`` is size-gated physical strategy selection (the
-    ``connected_components`` pattern, r11 optimization round): an edge
-    set of at most ``driver_max_edges`` runs the same fixed-point
+    ``strategy`` is size-gated through ``pull_if_small``, which under
+    'auto' evaluates the edge list once, at call time. At most
+    ``_PAGERANK_DRIVER_MAX_EDGES`` edges run the same fixed-point
     iterations on the driver — bit-identical output, none of the
-    ~4 jobs/iteration of join/checkpoint scheduling latency. Larger
-    graphs take the iterative-join plan. EAGER AT BUILD TIME under
-    'auto'/'driver' (like connected_components): gating counts the
-    edge list when this function is called. ``strategy=`` forces a
-    path ('driver'/'distributed')."""
-    # edges and degrees are re-read every iteration (and the gate
-    # counts them) — checkpoint so iteration N doesn't recompute the
-    # upstream pair-mining plan N times (same discipline as connected
-    # components / k-means)
-    e = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst")
-    ).localCheckpoint()
-    n_edges = e.count()  # cheap on the checkpoint; gates + empty check
-    if n_edges == 0:
-        # empty-in, empty-out: no edges, no nodes, no ranks (the
-        # teleport term would divide by zero) — registry-wide
-        # empty-input sweep
-        return edges.sparkSession.createDataFrame(
-            [], "node long, degree long, pagerank double"
+    ~4 jobs/iteration of join/checkpoint latency; larger graphs take
+    the iterative-join plan over the cached edge list. ``strategy=``
+    forces a path ('driver'/'distributed')."""
+    e = parallel.pull_if_small(
+        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")),
+        parallel.strategy_bound(strategy, _PAGERANK_DRIVER_MAX_EDGES),
+    )
+    if not isinstance(e, DataFrame):
+        return _pagerank_driver(
+            edges.sparkSession, e, damping, iters, round_dp
         )
-    if strategy == "auto":
-        strategy = (
-            "driver" if n_edges <= driver_max_edges else "distributed"
-        )
-    if strategy == "driver":
-        return _pagerank_driver(e, damping, iters, round_dp)
     nodes = e.select(F.col("_dst").alias("_id")).distinct()
-    n_nodes = nodes.count()  # scalar: sizes the teleport term
+    # scalar: sizes the teleport term (no edges → no nodes → no ranks)
+    n_nodes = max(nodes.count(), 1)
     deg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg")).cache()
     base = (1.0 - damping) / float(n_nodes)
 
@@ -207,18 +188,15 @@ def pagerank_over_pairs(
     )
 
 
-def _triangle_driver(e: DataFrame) -> DataFrame:
-    """Driver-side exact triangle census for edge sets below the gate
+def _triangle_driver(spark, tbl) -> DataFrame:
+    """Driver-side exact triangle census over the pulled edge table
     (same boundary/rationale as ``_cc_driver`` / ``_pagerank_driver``):
-    all four counts are exact integers on either path, and the one
-    double division runs through the SAME Spark expression as the
-    distributed form, so outputs are identical. Assumes the documented
-    input contract (one row per undirected edge, id_a < id_b)."""
+    all four counts are exact integers on either path. Assumes the
+    documented input contract (one row per undirected edge, id_a <
+    id_b)."""
     import numpy as np
 
-    tbl = e.toArrow()
-    a = np.asarray(tbl.column("a").to_pylist(), dtype=np.int64)
-    b = np.asarray(tbl.column("b").to_pylist(), dtype=np.int64)
+    a, b = parallel.pulled_ids(tbl, "a"), parallel.pulled_ids(tbl, "b")
     ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
     ai, bi = inv[: len(a)], inv[len(a):]
     n_nodes, n_edges = len(ids), len(a)
@@ -232,29 +210,29 @@ def _triangle_driver(e: DataFrame) -> DataFrame:
     lt = (da < db) | (da == db)
     u = np.where(lt, ai, bi)
     v = np.where(lt, bi, ai)
+    oriented = list(zip(u.tolist(), v.tolist()))
     out: list[set] = [set() for _ in range(n_nodes)]
-    for x, y in zip(u.tolist(), v.tolist()):
+    for x, y in oriented:
         out[x].add(y)
     # each triangle counted exactly once from its lowest-degree corner:
     # for oriented edge (u,v), common out-neighbours close the wedge
-    n_tri = 0
-    for x, y in zip(u.tolist(), v.tolist()):
-        sx, sy = out[x], out[y]
-        if len(sy) < len(sx):
-            sx, sy = sy, sx
-        n_tri += sum(1 for z in sx if z in sy)
-    from vectorsearchutil_spark.functions.vector import round_half_up
-
-    row = e.sparkSession.createDataFrame(
+    # (set & set iterates the smaller side)
+    n_tri = sum(len(out[x] & out[y]) for x, y in oriented)
+    return spark.createDataFrame(
         [(n_nodes, n_edges, n_tri, n_wedges)],
         "n_nodes long, n_edges long, n_triangles long, n_wedges long",
     )
-    # IDENTICAL final expression to the distributed path below
-    return row.select(
-        "n_nodes",
-        "n_edges",
-        "n_triangles",
-        "n_wedges",
+
+
+def _with_coefficient(counts: DataFrame) -> DataFrame:
+    """The census row of either path, plus clustering_coeff =
+    3·triangles / wedges: ONE double division, the same expression on
+    both paths, so their outputs are identical."""
+    from vectorsearchutil_spark.functions.vector import round_half_up
+
+    cols = ["n_nodes", "n_edges", "n_triangles", "n_wedges"]
+    return counts.select(
+        *[F.col(c).cast("long").alias(c) for c in cols],
         F.coalesce(
             round_half_up(
                 F.lit(3.0)
@@ -272,7 +250,6 @@ def triangle_count(
     id_a: str = "id_a",
     id_b: str = "id_b",
     strategy: str = "auto",
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Exact triangle count + global clustering coefficient over an
     undirected pair list (one row per edge, ``id_a < id_b``). Returns
@@ -292,31 +269,19 @@ def triangle_count(
     Wedge total Σ deg·(deg−1)/2 uses integer ``div`` — no double
     fold anywhere.
 
-    ``strategy`` is the size-gated physical dispatch shared with
-    ``pagerank`` / ``connected_components`` (r11): at or below
-    ``driver_max_edges`` the census runs on the driver (identical
-    counts, one Arrow pull instead of the ~7-stage join cascade);
-    above it — or forced 'distributed' — the oriented-join plan runs.
-    EAGER AT BUILD TIME under 'auto'/'driver' (the gate counts edges).
+    ``strategy`` is size-gated through ``pull_if_small`` (as in
+    ``pagerank``): at most ``_TRIANGLE_DRIVER_MAX_EDGES`` edges run the
+    census on the driver (identical counts, none of the ~7-stage join
+    cascade); above it — or forced 'distributed' — the oriented-join
+    plan reads the cached edge list at each of its six references
+    instead of re-deriving the upstream pair-mining lineage.
     """
-    from vectorsearchutil_spark.functions.vector import round_half_up
-
-    # The edge list is referenced many times below (degrees ×2, the
-    # orientation join, the wedge self-join ×2, the closing-edge
-    # probe) — without a checkpoint each reference RE-DERIVES the
-    # upstream pair-mining lineage (the shingle self-join), the exact
-    # compounding the scan-audit gate exists to catch (measured: the
-    # sf0.1 run dropped 48.7 → ~4 s with these two cuts). The edge
-    # and oriented-edge tables are near-dup-pair-sized — bounded.
-    e = pairs.select(
-        F.col(id_a).alias("a"), F.col(id_b).alias("b")
-    ).localCheckpoint(eager=False)
-    if strategy == "auto":
-        strategy = (
-            "driver" if e.count() <= driver_max_edges else "distributed"
-        )
-    if strategy == "driver":
-        return _triangle_driver(e)
+    e = parallel.pull_if_small(
+        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")),
+        parallel.strategy_bound(strategy, _TRIANGLE_DRIVER_MAX_EDGES),
+    )
+    if not isinstance(e, DataFrame):
+        return _with_coefficient(_triangle_driver(pairs.sparkSession, e))
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -377,27 +342,7 @@ def triangle_count(
         ).alias("n_wedges"),
     )
     edges = e.agg(F.count(F.lit(1)).alias("n_edges"))
-    return (
-        nodes.crossJoin(edges)
-        .crossJoin(tri)
-        .select(
-            F.col("n_nodes").cast("long").alias("n_nodes"),
-            F.col("n_edges").cast("long").alias("n_edges"),
-            F.col("n_triangles").cast("long").alias("n_triangles"),
-            F.col("n_wedges").cast("long").alias("n_wedges"),
-            F.coalesce(
-                round_half_up(
-                    F.lit(3.0)
-                    * F.col("n_triangles").cast("double")
-                    / F.nullif(
-                        F.col("n_wedges").cast("double"), F.lit(0.0)
-                    ),
-                    6,
-                ),
-                F.lit(0.0),
-            ).alias("clustering_coeff"),
-        )
-    )
+    return _with_coefficient(nodes.crossJoin(edges).crossJoin(tri))
 
 
 def degree_assortativity(

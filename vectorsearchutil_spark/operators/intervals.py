@@ -46,8 +46,9 @@ def sessions_from_events(
     satisfies the (user, sid) clustering, so the session aggregate
     adds no exchange). Only the three columns the sessionization
     reads enter that shuffle — the events table's payload columns
-    (type/value/props) never leave the scan (guide §2.3)."""
-    events = events.select(user_col, ts_col, order_col)
+    (type/value/props) never leave the scan (guide §2.3). ``order_col``
+    may repeat ``ts_col`` or ``user_col``; it is then projected once."""
+    events = events.select(*dict.fromkeys([user_col, ts_col, order_col]))
     w = Window.partitionBy(user_col).orderBy(
         F.col(ts_col).asc(), F.col(order_col).asc()
     )

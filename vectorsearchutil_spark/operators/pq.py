@@ -9,11 +9,11 @@ Shape of the design:
 * **Train** — per-subspace k-means codebooks. Training runs on the
   driver over a bounded sample (``train_limit``), exactly like faiss
   trains on a corpus sample: codebooks are a few KB of model state,
-  not data-scale state. The math replicates
-  ``operators.clustering._kmeans_driver`` (float64, argmin ties to
-  the lowest code, 6dp HALF_UP centroid rounding per iteration,
-  empty clusters keep their centroid) so an oracle can re-derive the
-  codebooks in SQL.
+  not data-scale state. Each subspace runs
+  ``operators.clustering._lloyd``, the k-means driver path's loop
+  (float64, argmin ties to the lowest code, 6dp HALF_UP centroid
+  rounding per iteration, empty clusters keep their centroid), so an
+  oracle can re-derive the codebooks in SQL.
 * **Encode** — one narrow projection: the m codebooks travel as ONE
   broadcast row (array<array<struct<cid,cv>>>); each subspace's code
   is an array_min over (squared-distance, cid) structs. No shuffle,
@@ -46,7 +46,7 @@ from vectorsearchutil_spark.functions.vector import (
     l2_squared,
     lit_double_sql,
 )
-from vectorsearchutil_spark.operators.clustering import _round_half_up
+from vectorsearchutil_spark.operators.clustering import _lloyd
 
 Codebooks = list[list[list[float]]]  # [subspace][code][dim/m]
 
@@ -115,19 +115,10 @@ def pq_train(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     d = dim // m
-    books: Codebooks = []
-    for j in range(m):
-        S = X[:, j * d : (j + 1) * d]
-        cents = [S[i].tolist() for i in range(min(k, len(S)))]
-        for _ in range(iterations):
-            C = np.array(cents, dtype=np.float64)
-            a = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-            for c in range(len(cents)):
-                members = S[a == c]
-                if len(members):
-                    cents[c] = _round_half_up(members.mean(axis=0), 6)
-        books.append([list(map(float, cv)) for cv in cents])
-    return books
+    return [
+        [list(map(float, cv)) for cv in _lloyd(S, k, iterations)]
+        for S in (X[:, j * d : (j + 1) * d] for j in range(m))
+    ]
 
 
 def _codebook_row(df: DataFrame, books: Codebooks):

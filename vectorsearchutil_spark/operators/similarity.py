@@ -35,29 +35,27 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from vectorsearchutil_spark.functions import parallel
 from vectorsearchutil_spark.functions.vector import l2_distance
 
+#: non-NULL-row gate of ``neardup_pairs``' matrix path: 5M float64
+#: cells at the corpus's 64 dims.
+_NEARDUP_MATRIX_MAX_ROWS = 5_000_000 // 64
 
-def _collect_matrix(
-    df: DataFrame, id_col: str, vector_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """Collect (ids, row-major float64 matrix) for the broadcast side.
+#: ``cosine_lsh_pairs``' gate for verifying against a broadcast matrix
+#: instead of vector joins, in float64 cells (rows × dim; 50M ≈ 400 MB).
+_LSH_VERIFY_MAX_CELLS = 50_000_000
 
-    Zero rows yield a (0, 0) 2-D matrix — ``np.array([])`` is 1-D and
-    every ``axis=1`` reduction downstream would raise AxisError (the
-    empty-input class ADVICE r3 found in the blocked path)."""
-    rows = (
-        df.select(id_col, vector_col)
-        # a NULL vector cannot participate in any distance — drop it
-        # here so the object-dtype row doesn't poison the matrix
-        .filter(F.col(vector_col).isNotNull())
-        .collect()
-    )
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    if mat.ndim == 1:
-        mat = mat.reshape(len(ids), 0)
-    return ids, mat
+
+def _vectors(df: DataFrame, id_col: str, vector_col: str) -> DataFrame:
+    # a NULL vector cannot participate in any distance
+    return df.select(id_col, vector_col).filter(F.col(vector_col).isNotNull())
+
+
+def _matrix(tbl, id_col: str, vector_col: str) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, row-major float64 matrix) of a pulled ``_vectors`` table."""
+    ids = parallel.pulled_ids(tbl, id_col)
+    return ids, parallel.pulled_matrix(tbl, vector_col)
 
 
 def neardup_pairs_matrix(
@@ -74,8 +72,16 @@ def neardup_pairs_matrix(
     qualifying pairs. One narrow pass, no shuffle at all; output is
     the (small) qualifying pair set.
     """
-    spark = df.sparkSession
-    ids, mat = _collect_matrix(df, id_col, vector_col)
+    vecs = _vectors(df, id_col, vector_col)
+    return _neardup_matrix(vecs, vecs.toArrow(), vector_col, id_col, threshold)
+
+
+def _neardup_matrix(
+    vecs: DataFrame, tbl, vector_col: str, id_col: str, threshold: float
+) -> DataFrame:
+    """``neardup_pairs_matrix`` over the pulled ``_vectors`` table."""
+    spark = vecs.sparkSession
+    ids, mat = _matrix(tbl, id_col, vector_col)
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0.0] = 1.0
     normed = mat / norms[:, None]
@@ -122,10 +128,7 @@ def neardup_pairs_matrix(
     from vectorsearchutil_spark.functions.parallel import fanout_repartition
 
     return (
-        fanout_repartition(
-            df.select(id_col, vector_col)
-            .filter(F.col(vector_col).isNotNull())
-        )
+        fanout_repartition(vecs)
         .mapInPandas(compute, out_schema)
         .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
     )
@@ -243,41 +246,40 @@ def neardup_pairs(
     id_col: str = "vec_id",
     threshold: float = 0.9,
     strategy: str = "auto",
-    dim: int = 64,
-    matrix_max_cells: int = 5_000_000,
     n_blocks: int = 32,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Exact cosine near-dup pairs with size-gated physical strategy
     (the broadcast-join analogy, mirroring ``kmeans(strategy="auto")``):
 
-    * ``matrix`` — collect+broadcast the corpus matrix, one narrow
-      BLAS pass (fastest at small n where the driver round-trip is
-      the whole cost);
+    * ``matrix`` — pull+broadcast the corpus matrix, one narrow BLAS
+      pass (fastest at small n where the driver round-trip is the
+      whole cost);
     * ``blocked`` — distributed block-pair tasks, no driver collect,
       identical results (the production path above the gate);
-    * ``auto`` — pick by ``n_rows·dim`` (pass ``n_rows`` when known
-      to avoid the sizing count job).
+    * ``auto`` — ``pull_if_small`` on the non-NULL (id, vector) rows:
+      at most ``_NEARDUP_MATRIX_MAX_ROWS`` (5M cells at 64 dims) come
+      back as the matrix, more run blocked over the cached rows.
 
-    The 5M-cell default gate (~78k×64) is MEASURED, not a memory
-    bound: at 50k×64 the matrix path wins (0.6 s vs 1.5 s — task
-    overhead dominates), at 125k×64 the blocked path wins 51.4 s vs
-    11.1 s at n_blocks=32 (even work distribution beats the single
-    broadcast pass once n² compute dwarfs the fixed overhead; PERF.md
-    round 3). Both paths return identical (id_a, id_b, cosine) rows,
-    so the same oracle covers them.
+    The gate is MEASURED, not a memory bound: at 50k×64 the matrix
+    path wins (0.6 s vs 1.5 s — task overhead dominates), at 125k×64
+    the blocked path wins 51.4 s vs 11.1 s at n_blocks=32 (even work
+    distribution beats the single broadcast pass once n² compute
+    dwarfs the fixed overhead; PERF.md round 3). Both paths return
+    identical (id_a, id_b, cosine) rows, so one oracle covers them.
     """
-    if strategy == "auto":
-        if n_rows is None:
-            n_rows = df.count()
-        strategy = (
-            "matrix" if n_rows * dim <= matrix_max_cells else "blocked"
+    if strategy == "blocked":
+        return neardup_pairs_blocked(
+            df, vector_col, id_col, threshold, n_blocks=n_blocks
         )
-    if strategy == "matrix":
-        return neardup_pairs_matrix(df, vector_col, id_col, threshold)
-    return neardup_pairs_blocked(
-        df, vector_col, id_col, threshold, n_blocks=n_blocks
+    vecs = _vectors(df, id_col, vector_col)
+    pulled = parallel.pull_if_small(
+        vecs, None if strategy == "matrix" else _NEARDUP_MATRIX_MAX_ROWS
     )
+    if isinstance(pulled, DataFrame):
+        return neardup_pairs_blocked(
+            pulled, vector_col, id_col, threshold, n_blocks=n_blocks
+        )
+    return _neardup_matrix(vecs, pulled, vector_col, id_col, threshold)
 
 
 def knn_batch_matrix(
@@ -301,7 +303,10 @@ def knn_batch_matrix(
     The corpus (the 100 TB side) never shuffles and is read once; the
     final window sees ≤ k rows per (query, batch)."""
     spark = corpus.sparkSession
-    q_ids, q_mat = _collect_matrix(queries, query_id_col, query_vector_col)
+    q_ids, q_mat = _matrix(
+        _vectors(queries, query_id_col, query_vector_col).toArrow(),
+        query_id_col, query_vector_col,
+    )
     if not len(q_ids):  # no queries → no result rows (not a worker error)
         return spark.createDataFrame(
             [],
@@ -594,18 +599,13 @@ def _lsh_plane(plane: int, dim: int) -> list[float]:
 
 
 def _verify_pairs_matrix(
-    df: DataFrame,
-    cand: DataFrame,
-    vector_col: str,
-    id_col: str,
-    threshold: float,
+    spark, ids: np.ndarray, mat: np.ndarray, cand: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact-cosine verification of candidate pairs against a
     broadcast normalized corpus matrix: per Arrow batch of (id_a,
     id_b) pairs, two vectorized row lookups and one row-wise dot —
-    no vector joins, no interpreted per-pair array math."""
-    spark = df.sparkSession
-    ids, mat = _collect_matrix(df, id_col, vector_col)
+    no vector joins, no interpreted per-pair array math. Cosines are
+    rounded to 4dp like the join path's."""
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0.0] = 1.0
     b_ids = spark.sparkContext.broadcast(ids)
@@ -635,7 +635,9 @@ def _verify_pairs_matrix(
                 }
             )
 
-    return cand.mapInPandas(compute, out_schema)
+    return cand.mapInPandas(compute, out_schema).select(
+        "id_a", "id_b", F.round("cosine", 4).alias("cosine")
+    )
 
 
 def cosine_lsh_pairs(
@@ -647,7 +649,6 @@ def cosine_lsh_pairs(
     threshold: float = 0.3,
     dim: int = 64,
     verify: str = "auto",
-    matrix_max_cells: int = 50_000_000,
 ) -> DataFrame:
     """Approximate cosine near-dup via multi-table random-hyperplane
     LSH.
@@ -667,6 +668,23 @@ def cosine_lsh_pairs(
 
     from vectorsearchutil_spark.functions.vector import cosine_similarity
 
+    # exact-cosine verify, size-gated through ``pull_if_small``
+    # (broadcast-join analogy): when the corpus matrix fits comfortably
+    # in executor memory (``_LSH_VERIFY_MAX_CELLS``), verify against
+    # the broadcast matrix — no vector joins, BLAS instead of
+    # interpreted per-pair array math. Larger corpora take the join
+    # path, and sign and join the cached non-NULL rows (a NULL vector
+    # has no signature and no cosine, so dropping it changes nothing).
+    mat = None
+    if verify != "join":
+        pulled = parallel.pull_if_small(
+            _vectors(df, id_col, vector_col),
+            None if verify == "matrix" else _LSH_VERIFY_MAX_CELLS // dim,
+        )
+        if isinstance(pulled, DataFrame):
+            df = pulled
+        else:
+            mat = _matrix(pulled, id_col, vector_col)
     # plane p (global index) is shared with the SQL oracle via the
     # md5("p:j") derivation. All n_tables·n_planes dot products run as
     # ONE BLAS matmul per Arrow batch — per-row higher-order-function
@@ -700,20 +718,8 @@ def cosine_lsh_pairs(
     from vectorsearchutil_spark.operators.dedup import bucket_pairs
 
     cand = bucket_pairs(signed, id_col)
-    # exact-cosine verify, size-gated (broadcast-join analogy): when
-    # the corpus matrix fits comfortably in executor memory (default
-    # 50M cells = 400 MB float64), verify against the broadcast
-    # matrix — no vector joins, BLAS instead of interpreted per-pair
-    # array math. Larger corpora take the join path.
-    if verify == "auto":
-        verify = (
-            "matrix" if df.count() * dim <= matrix_max_cells else "join"
-        )
-    if verify == "matrix":
-        out = _verify_pairs_matrix(df, cand, vector_col, id_col, threshold)
-        return out.select(
-            "id_a", "id_b", F.round("cosine", 4).alias("cosine")
-        )
+    if mat is not None:
+        return _verify_pairs_matrix(df.sparkSession, *mat, cand, threshold)
     va = df.select(F.col(id_col).alias("id_a"), F.col(vector_col).alias("va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vector_col).alias("vb"))
     return (
