@@ -19,6 +19,8 @@ SF_DIR = "/root/testdata/sf0.001"
 #: property comparisons, multi-restart ACID/streaming scenarios), so
 #: the split is a runtime-budget tier, not a coverage cut. Keep this
 #: list CENTRAL — one auditable place instead of 14 scattered marks.
+#: ``test_knn.py::test_self_knn_blocked_odd_block_counts`` has since
+#: left the tier: on the block-pair stream its call takes ~3 s.
 _SLOW_TESTS = {
     "test_empty_registry.py::test_every_query_executes_on_tiny_tables",
     "test_tz_parity.py::test_tz_parity_hostile_zones",
@@ -48,7 +50,6 @@ _SLOW_TESTS = {
     "test_streaming.py::test_stream_ingest_deduped_rejects_near_dups",
     "test_mlops.py::test_logreg_partitioning_invariant_bitwise",
     "test_knn.py::test_self_knn_strategy_equality",
-    "test_knn.py::test_self_knn_blocked_odd_block_counts",
     "test_sketches.py::test_weighted_quantile_generalization",
     "test_edge_inputs.py::test_session3_wave3_ops_on_degenerate_inputs",
     "test_edge_inputs.py::test_session3_ops_on_degenerate_inputs",

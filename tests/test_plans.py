@@ -2,6 +2,8 @@
 plan, not a hope — filters reach the scan, dims broadcast, top-k never
 global-sorts, fact joins never go cartesian."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -230,21 +232,50 @@ def test_cms_probe_broadcasts_sketch(spark, sf_dir):
     assert_no_cartesian(df)
 
 
+def _assert_block_pairs_shape(df):
+    """The ``parallel.block_pairs`` plan: one ``MapInArrow`` directly
+    over one Sort over one hash Exchange on (ba, bb), fed by a Generate
+    fan-out — and NO driver-side corpus materialization, broadcast
+    task list or per-group pandas call anywhere."""
+    plan = formatted_plan(df)
+    nodes = [
+        re.sub(r"^[\s+\-*]*", "", line).rsplit(" (", 1)[0].strip()
+        for line in plan.partition("\n\n")[0].splitlines()[1:]
+    ]
+    assert nodes.count("MapInArrow") == 1, nodes
+    at = nodes.index("MapInArrow")
+    assert nodes[at + 1 : at + 3] == ["Sort", "Exchange"], nodes
+    below = nodes[at + 3 :]
+    assert "Generate" in below and "Exchange" not in below, nodes
+    assert "Sort" not in below, nodes
+    assert re.search(r"hashpartitioning\(ba#\d+, bb#\d+", plan)
+    for node in ("CollectLimit", "BroadcastExchange", "FlatMapGroupsInPandas"):
+        assert node not in plan, node
+
+
 def test_neardup_blocked_no_driver_collect_in_plan(spark, sf_dir):
-    """The blocked exact all-pairs plan: block-pair tasks via
-    applyInPandas, the tiny task list broadcast, and NO driver-side
-    corpus materialization anywhere (the point of the strategy)."""
+    """The blocked exact all-pairs plan streams block pairs through
+    one mapInArrow per partition, with no driver collect."""
     from vectorsearchutil_spark.operators.similarity import (
         neardup_pairs_blocked,
     )
     from vectorsearchutil_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    df = neardup_pairs_blocked(emb, threshold=0.4, n_blocks=4)
-    plan = formatted_plan(df)
-    assert "FlatMapGroupsInPandas" in plan
-    assert "BroadcastExchange" in plan  # the 10-row task list
-    assert "CollectLimit" not in plan
+    _assert_block_pairs_shape(
+        neardup_pairs_blocked(emb, threshold=0.4, n_blocks=4)
+    )
+
+
+def test_self_knn_blocked_no_driver_collect_in_plan(spark, sf_dir):
+    """Same block-pair plan under the blocked self-kNN census."""
+    from vectorsearchutil_spark.operators.knn import _self_knn_topk_blocked
+    from vectorsearchutil_spark.sources.readers import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    _assert_block_pairs_shape(
+        _self_knn_topk_blocked(emb, 5, "embedding", "vec_id", n_blocks=4)
+    )
 
 
 def test_zorder_key_stays_jvm_side(spark, sf_dir):

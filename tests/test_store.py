@@ -18,6 +18,14 @@ def test_empty_store_query_returns_none(store):
     assert store.query("anything") is None
 
 
+def test_zero_row_store_query_returns_none(store, spark):
+    """A store whose frame holds no rows answers like an unset one."""
+    store.set_data(spark.createDataFrame([], "target string, option1 string"))
+    assert store._df is not None and store.count() == 0
+    assert store.query("anything") is None
+    assert store.query_with_info("anything") is None
+
+
 def test_set_data_requires_target(store, spark):
     df = spark.createDataFrame([("x",)], ["not_target"])
     store.set_data(df)  # silent no-op per VectorSearchBase.py:104-105

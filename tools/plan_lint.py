@@ -8,7 +8,7 @@ answer is:
   (intentional tiny cross joins compile to BroadcastNestedLoopJoin
   and are fine);
 - ``BatchEvalPython``    — a row-at-a-time Python UDF on the hot path
-  (Arrow-vectorized ArrowEvalPython / MapInPandas /
+  (Arrow-vectorized ArrowEvalPython / MapInPandas / MapInArrow /
   FlatMapGroupsInPandas are the sanctioned Python escapes).
 
 Also reports per-query Exchange counts (informational — the shuffle

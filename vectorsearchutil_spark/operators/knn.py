@@ -408,13 +408,13 @@ def _self_knn_topk_blocked(
     before compute at 100 TB; this path closes that posture gap,
     mirroring ``similarity.neardup_pairs_blocked``).
 
-    Rows hash into ``n_blocks`` blocks; every unordered block pair
-    (ba ≤ bb) becomes ONE ``applyInPandas`` task holding exactly two
-    blocks (2·(n/B)·dim float64 peak). A cross task scores the pair
+    ``parallel.block_pairs`` hands every unordered block pair
+    (ba ≤ bb) to one kernel call holding exactly two blocks
+    (2·(n/B)·dim float64 peak). A cross pair is scored
     once and serves BOTH directions from the same score matrix
     (IEEE multiplication commutes, so ``corpus_norm·query_norm`` is
-    the identical double either way); the diagonal task scores its
-    block against itself with self-pairs masked. Per task each query
+    the identical double either way); the diagonal pair scores its
+    block against itself with self-pairs masked. Per pair each query
     keeps a TIE-WIDENED local top-k (everything ≥ its k-th score — a
     provable superset of the query's global top-k, independent of
     blocking), and one global (score desc, id asc) window reduces
@@ -427,14 +427,13 @@ def _self_knn_topk_blocked(
     equality tests pin this).
 
     Scale shape: shuffle volume n·B rows (each row lands in B
-    tasks); per-task memory two blocks + one NTILE×block score tile;
+    pairs); per-task memory two blocks + one NTILE×block score tile;
     candidate traffic ≤ n·B·k(+ties) rows into the window. O(n²)
     compute is inherent to the exact census — size B so blocks fit
     executors, and at corpus sizes where even that is infeasible run
     per IVF probe list as documented on ``knn_hubness``.
     """
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql.types import (
         DoubleType,
@@ -443,26 +442,7 @@ def _self_knn_topk_blocked(
         StructType,
     )
 
-    spark = valid.sparkSession
-    rows = valid.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(vector_col).alias("_vec"),
-        F.pmod(F.xxhash64(F.col(id_col).cast("long")), F.lit(n_blocks))
-        .cast("int")
-        .alias("_blk"),
-    )
-    tasks = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "ba int, bb int",
-    )
-    side_a = rows.join(
-        F.broadcast(tasks), rows["_blk"] == tasks["ba"]
-    ).select("ba", "bb", F.lit(0).alias("_side"), "_id", "_vec")
-    side_b = rows.join(
-        F.broadcast(tasks.filter(F.col("ba") != F.col("bb"))),
-        rows["_blk"] == tasks["bb"],
-    ).select("ba", "bb", F.lit(1).alias("_side"), "_id", "_vec")
-    both = side_a.unionAll(side_b)
+    from vectorsearchutil_spark.functions.parallel import block_pairs
 
     out_schema = StructType(
         [
@@ -478,54 +458,33 @@ def _self_knn_topk_blocked(
     NTILE = 256
     QBLOCK = 256
 
-    def compute(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        def matrix(part: pd.DataFrame):
-            if not len(part):
-                return (
-                    np.empty(0, dtype=np.int64),
-                    np.empty((0, 1)),
-                    np.empty(0),
-                )
-            part = part.sort_values("_id")
-            ids = part["_id"].to_numpy(dtype=np.int64)
-            m = np.array(list(part["_vec"]), dtype=np.float64)
-            # dim-at-a-time norm: identical addition order to the
-            # JVM fold and the arrow path's per-element loop
-            acc = np.zeros(len(m), dtype=np.float64)
-            for j in range(m.shape[1]):
-                col = m[:, j]
-                acc += col * col
-            return ids, m, np.sqrt(acc)
+    def norms(m):
+        # dim-at-a-time norm: identical addition order to the JVM
+        # fold and the arrow path's per-element loop
+        acc = np.zeros(len(m), dtype=np.float64)
+        for j in range(m.shape[1]):
+            col = m[:, j]
+            acc += col * col
+        return np.sqrt(acc)
 
-        def widened_cut(q, c, s):
-            """Per-query tie-widened top-kk over a candidate pool.
-            Keeps every row scoring >= its query's kk-th best - the
-            same widening rule as the arrow path, so the cut is
-            partitioning-independent."""
-            if not len(q):
-                return q, c, s
-            order = np.lexsort((c, -s, q))
-            q2, c2, s2 = q[order], c[order], s[order]
-            starts = np.r_[0, np.flatnonzero(q2[1:] != q2[:-1]) + 1]
-            lens = np.diff(np.r_[starts, len(q2)])
-            kth = s2[starts + np.minimum(kk - 1, lens - 1)]
-            keep = s2 >= np.repeat(kth, lens)
-            return q2[keep], c2[keep], s2[keep]
+    def widened_cut(q, c, s):
+        """Per-query tie-widened top-kk over a candidate pool.
+        Keeps every row scoring >= its query's kk-th best - the
+        same widening rule as the arrow path, so the cut is
+        partitioning-independent."""
+        if not len(q):
+            return q, c, s
+        order = np.lexsort((c, -s, q))
+        q2, c2, s2 = q[order], c[order], s[order]
+        starts = np.r_[0, np.flatnonzero(q2[1:] != q2[:-1]) + 1]
+        lens = np.diff(np.r_[starts, len(q2)])
+        kth = s2[starts + np.minimum(kk - 1, lens - 1)]
+        keep = s2 >= np.repeat(kth, lens)
+        return q2[keep], c2[keep], s2[keep]
 
-        ba, bb = int(key[0]), int(key[1])
-        a_ids, a_mat, a_n = matrix(pdf[pdf["_side"] == 0])
-        if ba == bb:
-            b_ids, b_mat, b_n = a_ids, a_mat, a_n
-        else:
-            b_ids, b_mat, b_n = matrix(pdf[pdf["_side"] == 1])
-        if not len(a_ids) or not len(b_ids):
-            return pd.DataFrame(
-                {
-                    "_qid": np.empty(0, dtype=np.int64),
-                    id_col: np.empty(0, dtype=np.int64),
-                    "_d": np.empty(0, dtype=np.float64),
-                }
-            )
+    def kernel(ba, bb, a_ids, a_mat, b_ids, b_mat):
+        a_n = norms(a_mat)
+        b_n = a_n if ba == bb else norms(b_mat)
         d = a_mat.shape[1]
         # candidate pool: block-local argpartition pre-cuts keep
         # extraction O(block*k) per score block (the first version
@@ -598,11 +557,9 @@ def _self_knn_topk_blocked(
                 if pooled > 4_000_000:
                     flush()
         flush()
-        return pd.DataFrame(
-            {"_qid": pool_q[0], id_col: pool_c[0], "_d": pool_s[0]}
-        )
+        yield {"_qid": pool_q[0], id_col: pool_c[0], "_d": pool_s[0]}
 
-    cand = both.groupBy("ba", "bb").applyInPandas(compute, out_schema)
+    cand = block_pairs(valid, id_col, vector_col, n_blocks, kernel, out_schema)
     win = Window.partitionBy("_qid").orderBy(
         F.col("_d").desc(), F.col(id_col).asc()
     )

@@ -58,6 +58,13 @@ def _matrix(tbl, id_col: str, vector_col: str) -> tuple[np.ndarray, np.ndarray]:
     return ids, parallel.pulled_matrix(tbl, vector_col)
 
 
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; zero rows stay zero."""
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0.0] = 1.0
+    return mat / norms[:, None]
+
+
 def neardup_pairs_matrix(
     df: DataFrame,
     vector_col: str = "embedding",
@@ -82,11 +89,8 @@ def _neardup_matrix(
     """``neardup_pairs_matrix`` over the pulled ``_vectors`` table."""
     spark = vecs.sparkSession
     ids, mat = _matrix(tbl, id_col, vector_col)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    normed = mat / norms[:, None]
     b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(normed)
+    b_mat = spark.sparkContext.broadcast(_unit_rows(mat))
 
     out_schema = StructType(
         [
@@ -106,10 +110,7 @@ def _neardup_matrix(
         # thresholding happens per chunk, so only survivors accumulate.
         chunk = max(1, 32_000_000 // max(1, len(all_ids)))
         for pdf in batches:
-            q = np.array(list(pdf[vector_col]), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0.0] = 1.0
-            qs = q / qn[:, None]
+            qs = _unit_rows(np.array(list(pdf[vector_col]), dtype=np.float64))
             qa = pdf[id_col].to_numpy(dtype=np.int64)
             for lo in range(0, len(qa), chunk):
                 sims = qs[lo : lo + chunk] @ all_mat.T
@@ -143,41 +144,19 @@ def neardup_pairs_blocked(
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold with NO driver-side collect.
 
-    Rows hash into ``n_blocks`` blocks; every unordered block pair
-    (ba ≤ bb) becomes one ``applyInPandas`` task that BLAS-multiplies
-    its two blocks (upper triangle for the diagonal task). A pair of
-    ids lands in exactly one task, so no dedup pass is needed.
+    ``parallel.block_pairs`` hands every unordered block pair
+    (ba ≤ bb) to one kernel call that BLAS-multiplies its two blocks
+    (upper triangle on the diagonal). A pair of ids meets in exactly
+    one call, so no dedup pass is needed.
 
-    Scale shape: peak per-task memory is two blocks
-    (2·(n/B)·dim float64); each row is shuffled to exactly B tasks, so
+    Scale shape: peak per-task memory is one block pair
+    (2·(n/B)·dim float64); each row is shuffled to exactly B pairs, so
     shuffle volume is n·B rows — the price of removing the matrix
     path's driver collect/broadcast of the whole corpus. O(n²)
     compute is inherent to EXACT all-pairs; at corpus sizes where
     that is infeasible, ``cosine_lsh_pairs`` (approximate) is the
     knob, this is the exact distributed fallback.
     """
-    spark = df.sparkSession
-    rows = df.filter(F.col(vector_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(vector_col).alias("_vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
-        .cast("int")
-        .alias("_blk"),
-    )
-    tasks = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "ba int, bb int",
-    )
-    # side 0 = rows of block ba; side 1 = rows of block bb (cross
-    # tasks only — the diagonal task reads its block once)
-    side_a = rows.join(F.broadcast(tasks), rows["_blk"] == tasks["ba"]).select(
-        "ba", "bb", F.lit(0).alias("_side"), "_id", "_vec"
-    )
-    side_b = rows.join(
-        F.broadcast(tasks.filter(F.col("ba") != F.col("bb"))),
-        rows["_blk"] == tasks["bb"],
-    ).select("ba", "bb", F.lit(1).alias("_side"), "_id", "_vec")
-
     out_schema = StructType(
         [
             StructField("id_a", LongType()),
@@ -186,58 +165,28 @@ def neardup_pairs_blocked(
         ]
     )
 
-    def compute(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ba, bb = int(key[0]), int(key[1])
-
-        def matrix(part: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-            if not len(part):
-                # np.array([]) is 1-D; norm(axis=1) on it raises
-                # AxisError. An empty side (tiny/skewed corpus, or
-                # n_blocks > ~rows) must yield zero pairs instead.
-                return np.empty(0, dtype=np.int64), np.empty((0, 1))
-            part = part.sort_values("_id")
-            ids = part["_id"].to_numpy(dtype=np.int64)
-            m = np.array(list(part["_vec"]), dtype=np.float64)
-            n = np.linalg.norm(m, axis=1)
-            n[n == 0.0] = 1.0
-            return ids, m / n[:, None]
-
-        a_ids, a_mat = matrix(pdf[pdf["_side"] == 0])
-        if ba == bb:
-            b_ids_arr, b_mat_arr = a_ids, a_mat
-        else:
-            b_ids_arr, b_mat_arr = matrix(pdf[pdf["_side"] == 1])
-        if not len(a_ids) or not len(b_ids_arr):
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
+    def kernel(ba, bb, a_ids, a_mat, b_ids, b_mat):
+        a_mat = _unit_rows(a_mat)
+        b_mat = a_mat if ba == bb else _unit_rows(b_mat)
         # chunk the A side so the dense block stays ≤ ~256 MB even for
         # large blocks (same lesson as the matrix path: score memory
         # must be bounded by a constant, not by block size)
-        chunk = max(1, 32_000_000 // len(b_ids_arr))
-        outs = []
+        chunk = max(1, 32_000_000 // len(b_ids))
         for lo in range(0, len(a_ids), chunk):
-            sims = a_mat[lo : lo + chunk] @ b_mat_arr.T
+            sims = a_mat[lo : lo + chunk] @ b_mat.T
             ai, bj = np.nonzero(sims >= threshold)
-            left, right = a_ids[lo : lo + chunk][ai], b_ids_arr[bj]
-            if ba == bb:
-                keep = left < right  # upper triangle: id_a < id_b
-            else:
-                keep = np.ones(len(left), dtype=bool)
-            id_a = np.minimum(left[keep], right[keep])
-            id_b = np.maximum(left[keep], right[keep])
-            outs.append(
-                pd.DataFrame(
-                    {"id_a": id_a, "id_b": id_b,
-                     "cosine": sims[ai[keep], bj[keep]]}
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
+            left, right = a_ids[lo : lo + chunk][ai], b_ids[bj]
+            # upper triangle on the diagonal: id_a < id_b
+            keep = left < right if ba == bb else slice(None)
+            yield {
+                "id_a": np.minimum(left[keep], right[keep]),
+                "id_b": np.maximum(left[keep], right[keep]),
+                "cosine": sims[ai[keep], bj[keep]],
+            }
 
-    return (
-        side_a.unionByName(side_b)
-        .groupBy("ba", "bb")
-        .applyInPandas(compute, out_schema)
-        .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
-    )
+    return parallel.block_pairs(
+        df, id_col, vector_col, n_blocks, kernel, out_schema
+    ).select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
 
 
 def neardup_pairs(
@@ -260,12 +209,18 @@ def neardup_pairs(
       at most ``_NEARDUP_MATRIX_MAX_ROWS`` (5M cells at 64 dims) come
       back as the matrix, more run blocked over the cached rows.
 
-    The gate is MEASURED, not a memory bound: at 50k×64 the matrix
-    path wins (0.6 s vs 1.5 s — task overhead dominates), at 125k×64
-    the blocked path wins 51.4 s vs 11.1 s at n_blocks=32 (even work
-    distribution beats the single broadcast pass once n² compute
-    dwarfs the fixed overhead; PERF.md round 3). Both paths return
-    identical (id_a, id_b, cosine) rows, so one oracle covers them.
+    The gate is a speed crossover, not a memory bound. Measured
+    matrix vs blocked (n_blocks=32) on synthetic 64-dim vectors,
+    threshold 0.6, local[4] on a 4-core VM, median of 3 (2 at 125k):
+    10k rows 1.2 vs 1.6 s, 20k 3.4 vs 3.2 s, 50k 15.5 vs 13.4 s,
+    125k 78 vs 50 s. Once n² compute dwarfs the fixed overhead, the
+    blocked plan's even spread of block pairs beats the one broadcast
+    pass. The crossover (~20k rows here) now sits well below the
+    gate's 78,125 rows, which was set against the old per-pair pandas
+    kernel (PERF.md round 3: blocked lost 1.5 vs 0.6 s at 50k on 32
+    cores); these figures argue for lowering the gate to ~20k rows.
+    Both paths return identical (id_a, id_b, cosine) rows, so one
+    oracle covers them.
     """
     if strategy == "blocked":
         return neardup_pairs_blocked(

@@ -469,7 +469,7 @@ class VectorStore:
         VectorSearchBase.py:209-210). Result: id, save_columns,
         distance — ascending L2, ties by id.
         """
-        if self._df is None or self.data.rdd.isEmpty():
+        if self._df is None or self.data.isEmpty():
             return None
         if isinstance(q, str):
             qdf = self.spark.createDataFrame([(q,)], ["target"])
